@@ -82,6 +82,9 @@ class SalesWarehouse:
 
     def read_or_empty(self, layer: str, table: str, schema: T.StructType) -> DataFrame:
         p = self.path(layer, table)
+        # a crash mid-publish leaves the table only as a swap sibling;
+        # reading that as "no table yet" would rebuild it from one day
+        sio.recover_swap(p)
         if os.path.isdir(p) and any(
             f.endswith(".parquet") for _, _, fs in os.walk(p) for f in fs
         ):

@@ -95,8 +95,6 @@ def _ensure_loaded() -> None:
         llm_dedup2,
         llm_pipeline,
         llm_pipeline2,
-        llm_pipeline3,
-        llm_pipeline4,
         llm_pipeline5,
         llm_pipeline6,
         llm_pipeline7,

@@ -469,13 +469,15 @@ def _swap_publish(tmp: str, path: str) -> None:
     streaming job silently rebuild state from one micro-batch
     (round-12 advice).  ``recover_swap`` is the matching crash-recovery
     half: it adopts ``tmp`` or restores the aside copy when ``path`` is
-    missing."""
+    missing.  An aside is deleted only while the target exists: with no
+    target, a leftover aside is the last complete copy and stays the
+    aside until ``tmp`` is in."""
     import shutil
 
     old = path + "__old_swap"
-    if os.path.exists(old):  # stale aside from a crash after publish
-        shutil.rmtree(old)
     if os.path.exists(path):
+        if os.path.exists(old):  # stale aside from a crash after publish
+            shutil.rmtree(old)
         os.rename(path, old)
     os.rename(tmp, path)
     if os.path.exists(old):
@@ -501,8 +503,9 @@ def recover_swap(path: str) -> bool:
     committed), adopt it — it holds the full merged state; else restore
     the ``__old_swap`` aside.  Returns True if a copy was recovered.
     Callers that treat a missing target as "day 0" (streaming sketch /
-    dim folds) MUST call this before the existence check, or a crash
-    mid-publish silently restarts state from a single micro-batch."""
+    dim folds, the sales pipeline's ``read_or_empty``) MUST call this
+    before the existence check, or a crash mid-publish silently restarts
+    state from a single batch."""
     path = path.rstrip("/")
     if os.path.exists(path):
         return False

@@ -183,17 +183,20 @@ def _plan(df) -> str:
 
 
 def test_ivfpq_plan_broadcasts_and_bounds_the_rank_shuffle(spark):
-    """Cells/codebook/ADC tables must be broadcast (the corpus is never
-    on a build side), the argmin encodes via an aggregatable partial_min
-    (map-side combine, no per-candidate window), and the final per-query
-    rank must plant a Partial WindowGroupLimit below its Exchange."""
+    """The encode is one numpy pass per partition (mapInPandas) with no
+    corpus × cells join; the ADC table, built once in numpy, is
+    broadcast (the corpus is never on a build side); the ADC distance
+    sum combines map-side (partial_sum), and the final per-query rank
+    must plant a Partial WindowGroupLimit below its Exchange."""
     from star_schema_etl_airflow_spark.plans.ivfpq import embed_ivfpq_topk
 
     plan = _plan(embed_ivfpq_topk(spark, SF_DIR))
     assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan      # corpus × tiny cells
-    assert "BroadcastHashJoin" in plan            # codebook / ADC joins
-    assert "partial_min" in plan, plan            # encode argmin combines
+    assert "BroadcastNestedLoopJoin" not in plan  # no corpus × cells join
+    assert "MapInPandas" in plan, plan            # vectorised encode
+    assert "BroadcastHashJoin" in plan            # ADC table join
+    assert "BuildRight" in plan, plan             # corpus streams
+    assert "partial_sum" in plan, plan            # ADC sum combines
     lines = plan.splitlines()
     partial = [i for i, l in enumerate(lines)
                if "WindowGroupLimit" in l and "Partial" in l]

@@ -13,8 +13,10 @@ disk at every instant; ``recover_swap`` adopts the complete
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
+import pytest
 from pyspark.sql import types as T
 
 from star_schema_etl_airflow_spark.sources.io import _swap_publish, recover_swap
@@ -61,6 +63,27 @@ def test_swap_publish_clears_stale_aside(tmp_path):
     _swap_publish(tmp, path)
     assert _marker(path) == "v3"
     assert not os.path.exists(path + "__old_swap")
+
+
+def test_swap_publish_keeps_aside_when_target_missing(tmp_path, monkeypatch):
+    # crash window of an earlier publish: the target is aside, nothing
+    # is at the target.  The aside is the last complete copy, so a
+    # publish that crashes before its rename-in must not have deleted it
+    path, tmp = str(tmp_path / "t"), str(tmp_path / "t__tmp_swap")
+    _mkstate(path + "__old_swap", "v1")
+    _mkstate(tmp, "v2")
+    rename = os.rename
+
+    def crash_on_rename_in(src, dst):
+        if src == tmp:
+            raise OSError("crash before rename-in")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_rename_in)
+    with pytest.raises(OSError):
+        _swap_publish(tmp, path)
+    monkeypatch.undo()
+    assert _marker(path + "__old_swap") == "v1"
 
 
 def test_recover_adopts_complete_tmp(tmp_path):
@@ -212,3 +235,32 @@ def test_scd2_stream_survives_crash_mid_publish(spark, tmp_path):
     s = sorted(tuple(r) for r in got.collect())
     b = sorted(tuple(r) for r in expected.collect())
     assert s == b
+
+
+def test_sales_pipeline_survives_crash_mid_publish(spark, tmp_path):
+    """A crash after ``dim_customers`` was moved aside and before the new
+    copy was renamed in: the next run date must pick up the aside copy,
+    not rebuild the dimension from that day's slice alone."""
+    from test_pipeline import CONFIG, D1, D2, _write_landing
+
+    from star_schema_etl_airflow_spark.plans.sales_domain import (
+        SalesWarehouse,
+        build_sales_pipeline,
+    )
+    from star_schema_etl_airflow_spark.sources.schema import load_config
+
+    cfg = load_config(CONFIG)
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    _write_landing(crashed, cfg)
+    build_sales_pipeline(SalesWarehouse(spark, crashed, cfg)).run(spark, D1)
+    shutil.copytree(crashed, clean)
+
+    dim = os.path.join(crashed, "core", "dim_customers")
+    os.rename(dim, dim + "__old_swap")
+
+    def dim_customers_after_d2(base):
+        wh = SalesWarehouse(spark, base, cfg)
+        build_sales_pipeline(wh).run(spark, D2)
+        return sorted(tuple(r) for r in wh.read("core", "dim_customers").collect())
+
+    assert dim_customers_after_d2(crashed) == dim_customers_after_d2(clean)

@@ -2,7 +2,8 @@
 LOCAL_CORRECTNESS.md (round-8 verdict task 8): the driver samples ~50
 queries per round, so the committed sweep is the only proof for the
 rest — a new query cannot merge without re-running the sweep (or a
-targeted addendum noted in the record).
+targeted addendum noted in the record).  And every recorded query must
+still be registered, so a deleted query cannot leave a stale record.
 
 Data-only test; the sweep itself is
 ``python tools/check_correctness.py --sweep``.
@@ -24,6 +25,14 @@ def test_every_registered_query_has_a_committed_sweep_record():
         f"{len(gap)} registered queries lack a committed oracle record: "
         f"{gap} — run `python tools/check_correctness.py --sweep` and "
         "commit the regenerated LOCAL_CORRECTNESS.md"
+    )
+
+
+def test_every_recorded_query_is_still_registered():
+    old = sweep_coverage.stale()
+    assert not old, (
+        f"{len(old)} queries in LOCAL_CORRECTNESS.md are no longer "
+        f"registered: {old} — remove their rows from the record"
     )
 
 

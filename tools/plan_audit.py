@@ -61,7 +61,6 @@ EXTRA = [
     "pq_adc_topk",
     "leakage_safe_split",
     "unimax_sample",
-    "curation_pipeline_v4",
     "dedup_substring_spans",
     "dedup_substring_excised",
     "video_frames",

@@ -109,8 +109,8 @@ def main() -> None:
         _topk,
     )
     from star_schema_etl_airflow_spark.session import get_spark
+    from star_schema_etl_airflow_spark.sources.io import publish_swap
     from star_schema_etl_airflow_spark.streaming.retrieval_stream import (
-        _publish_swap,
         run_retrieval_stream,
     )
 
@@ -140,7 +140,7 @@ def main() -> None:
                 shutil.rmtree(run_dir)
             os.makedirs(run_dir)
             state = os.path.join(run_dir, "state")
-            _publish_swap(at_topk, state)
+            publish_swap(at_topk, state)
             t0 = time.perf_counter()
             final = run_retrieval_stream(spark, landing, state, schema, qidf)
             wall = time.perf_counter() - t0

@@ -6,11 +6,13 @@ The committed ``LOCAL_CORRECTNESS.md`` sweep record is the only proof
 for the queries the driver's 50-query sample never touches; rounds 7
 and 8 both shipped queries with no committed oracle record.  This tool
 lists every query in the registry that the committed sweep does not
-cover, so a new query cannot merge silently unverified — wired into
-pytest via ``tests/test_sweep_coverage.py``.
+cover, so a new query cannot merge silently unverified, and every
+recorded name that is no longer registered, so the record cannot go
+stale when a query is deleted — wired into pytest via
+``tests/test_sweep_coverage.py``.
 
 Usage:
-    python tools/sweep_coverage.py     # prints missing names, exit 1 if any
+    python tools/sweep_coverage.py     # prints missing/stale names, exit 1 if any
 """
 
 from __future__ import annotations
@@ -48,16 +50,26 @@ def missing() -> list[str]:
     return sorted(registered_names() - sweep_names())
 
 
+def stale() -> list[str]:
+    return sorted(sweep_names() - registered_names())
+
+
 def main() -> int:
-    gap = missing()
+    gap, old = missing(), stale()
     for name in gap:
         print(f"MISSING from committed sweep: {name}")
+    for name in old:
+        print(f"STALE in committed sweep (not registered): {name}")
     if gap:
         print(f"{len(gap)} registered queries lack a committed oracle "
               "record — run: python tools/check_correctness.py --sweep")
+    if old:
+        print(f"{len(old)} recorded queries are no longer registered — "
+              "remove them from LOCAL_CORRECTNESS.md")
+    if gap or old:
         return 1
-    print(f"ok: all {len(registered_names())} registered queries appear "
-          "in LOCAL_CORRECTNESS.md")
+    print(f"ok: the {len(registered_names())} registered queries are "
+          "exactly the ones in LOCAL_CORRECTNESS.md")
     return 0
 
 
