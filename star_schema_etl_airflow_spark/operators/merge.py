@@ -27,9 +27,14 @@ def merge_upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> D
 
     Both inputs must share a schema; one row per key in ``source`` is the
     caller's contract (dedupe first — see ``scd2.dedupe_latest``).
+
+    The key side of the anti-join is not ``distinct()``-ed: a left-anti
+    join only asks whether a match exists, so duplicate source keys cannot
+    change its result, and a distinct would only add an aggregation (and
+    its exchange) over the source.
     """
     keys = list(keys)
-    untouched = target.join(source.select(keys).distinct(), on=keys, how="left_anti")
+    untouched = target.join(source.select(keys), on=keys, how="left_anti")
     return untouched.unionByName(source.select(target.columns))
 
 

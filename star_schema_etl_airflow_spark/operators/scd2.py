@@ -17,6 +17,10 @@ with one declarative transform.  Deliberate deviations fixing reference bugs
   106-110, double-inserts on same-day re-runs)
 - multiple rows per key in one slice are deduped to the latest before
   classification (reference MERGE would be ambiguous)
+- slice rows with a NULL business key are dropped: NULL never equals NULL
+  in the classify join, so such a row would classify "new" on every apply
+  and stack one more current version per re-run — breaking both rerun
+  idempotence and one-current-version-per-key
 
 Validity convention: half-open ``[effective_date, expiration_date)``,
 NULL expiration = open/current — matching the fact PIT join
@@ -215,6 +219,10 @@ def apply_scd2(
     if distributed_keys is None:
         distributed_keys = _estimated_bytes(source) > DISTRIBUTED_SK_BYTES
 
+    # NULL keys go first (see the module docstring); dropping them here also
+    # gives the expire and insert branches one identical slice plan, so they
+    # share its dedupe exchange instead of each shuffling it
+    source = source.filter(F.col(key).isNotNull())
     src = dedupe_latest(source, key, order_col) if order_col else source
     src = src.select(key, *tracked)
 

@@ -21,14 +21,27 @@ where the reference partitions (README.md:113-116).  Audit timestamp columns
 are intentionally replaced by the injected ``run_date`` (SURVEY.md §7.4
 decision 3) so reruns are byte-identical — the idempotency the reference
 claims but violates (ref bug #6).
+
+Declared schemas: every warehouse read declares its table's stored schema
+from one map, :attr:`SalesWarehouse.schemas` — never inferred.  Inferring
+reads a footer in a Spark job of its own, and fails with
+``UNABLE_TO_INFER_SCHEMA`` on a table that has no files yet, such as a
+``fact_orders`` whose first date resolved no rows.
+
+Stage results: stages talk to each other only through their tables.  An
+ingest stage returns the number of rows it wrote, observed on the write
+itself (``DataFrame.observe``) rather than by a second scan; every other
+stage returns ``None`` instead of a read-back of the table it wrote.
+Callers that want a table read it with :meth:`SalesWarehouse.read`.
 """
 
 from __future__ import annotations
 
 import os
+from functools import cached_property
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -36,6 +49,7 @@ from star_schema_etl_airflow_spark.functions import safe_divide
 from star_schema_etl_airflow_spark.operators.merge import merge_upsert
 from star_schema_etl_airflow_spark.operators.pit import as_of_join
 from star_schema_etl_airflow_spark.operators.scd2 import apply_scd2
+from star_schema_etl_airflow_spark.plans import dims
 from star_schema_etl_airflow_spark.plans.dims import build_date_dim
 from star_schema_etl_airflow_spark.plans.pipeline import Pipeline
 from star_schema_etl_airflow_spark.sources import io as sio
@@ -45,6 +59,11 @@ CUSTOMER_TRACKED = [
     "first_name", "last_name", "email", "address", "city", "state", "zipcode",
 ]
 PRODUCT_TRACKED = ["name", "category", "price"]
+# (dimension, raw source table, business key, surrogate key, tracked columns)
+DIMS = [
+    ("dim_customers", "customers", "customer_id", "customer_sk", CUSTOMER_TRACKED),
+    ("dim_products", "products", "product_id", "product_sk", PRODUCT_TRACKED),
+]
 
 
 def _scd2_dim_schema(key: str, tracked_fields: list[T.StructField], sk: str) -> T.StructType:
@@ -60,6 +79,28 @@ def _scd2_dim_schema(key: str, tracked_fields: list[T.StructField], sk: str) -> 
     )
 
 
+# Stored schemas of the tables the pipeline derives, in the column order a
+# read returns: merge keys first (the anti-join of ``merge_upsert`` leads
+# with them), the partition column last.
+FACT_ORDERS_DDL = (
+    "order_id STRING, order_item_id STRING, customer_sk BIGINT, "
+    "order_amount DOUBLE, quantity BIGINT, product_id STRING, product_sk BIGINT, "
+    "unit_price DOUBLE, item_amount DOUBLE, status STRING, order_date DATE"
+)
+SALES_SUMMARY_DDL = (
+    "year INT, month INT, month_name STRING, product_category STRING, "
+    "total_sales DOUBLE, total_orders BIGINT, total_quantity BIGINT, "
+    "avg_order_value DOUBLE, date DATE"
+)
+CUSTOMER_ANALYTICS_DDL = (
+    "customer_id STRING, first_name STRING, last_name STRING, city STRING, "
+    "state STRING, first_order_date DATE, last_order_date DATE, "
+    "total_orders BIGINT, total_lifetime_value DOUBLE, "
+    "days_since_last_order BIGINT, average_order_value DOUBLE, "
+    "customer_segment STRING"
+)
+
+
 class SalesWarehouse:
     """Paths + read/write helpers for one warehouse directory."""
 
@@ -67,6 +108,27 @@ class SalesWarehouse:
         self.spark = spark
         self.base = base_dir
         self.cfg = cfg
+
+    @cached_property
+    def schemas(self) -> dict[str, T.StructType]:
+        """table → the schema every read of it declares."""
+        out = {}
+        for t in scfg.tables_of_type(self.cfg, "raw"):
+            out[t] = T.StructType(
+                scfg.table_schema(self.cfg, t).fields
+                + [T.StructField("ingestion_timestamp", T.TimestampType()),
+                   T.StructField("ingest_date", T.DateType())]
+            )
+        for dim, raw, key, sk, tracked in DIMS:
+            fields = [f for f in out[raw].fields if f.name in tracked]
+            out[dim] = _scd2_dim_schema(key, fields, sk)
+        # a schema probe, so through ``dims``: perfbench wraps this module's
+        # ``build_date_dim`` to count the date rows the dim_dates stage makes
+        out["dim_dates"] = dims.build_date_dim(self.spark, "2000-01-01", "2000-01-01").schema
+        out["fact_orders"] = T.StructType.fromDDL(FACT_ORDERS_DDL)
+        out["sales_summary"] = T.StructType.fromDDL(SALES_SUMMARY_DDL)
+        out["customer_analytics"] = T.StructType.fromDDL(CUSTOMER_ANALYTICS_DDL)
+        return out
 
     # --- paths ---------------------------------------------------------
     def landing_path(self, table: str, run_date: str) -> str:
@@ -78,18 +140,16 @@ class SalesWarehouse:
 
     # --- reads ---------------------------------------------------------
     def read(self, layer: str, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(layer, table))
+        return self.spark.read.schema(self.schemas[table]).parquet(self.path(layer, table))
 
-    def read_or_empty(self, layer: str, table: str, schema: T.StructType) -> DataFrame:
+    def read_or_empty(self, layer: str, table: str) -> DataFrame:
         p = self.path(layer, table)
         # a crash mid-publish leaves the table only as a swap sibling;
         # reading that as "no table yet" would rebuild it from one day
         sio.recover_swap(p)
-        if os.path.isdir(p) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(p) for f in fs
-        ):
-            return self.spark.read.schema(schema).parquet(p)
-        return self.spark.createDataFrame([], schema)
+        if os.path.isdir(p):
+            return self.read(layer, table)
+        return self.spark.createDataFrame([], self.schemas[table])
 
     def raw_slice(self, table: str, run_date: str) -> DataFrame:
         """One day's raw partition (P2: the {{dstart}} filter — prunes to
@@ -97,24 +157,6 @@ class SalesWarehouse:
         return self.read("raw", table).filter(
             F.col("ingest_date") == F.lit(run_date).cast("date")
         )
-
-
-def _dim_stage(wh: SalesWarehouse, table: str, raw_table: str, key: str,
-               sk: str, tracked: list[str], run_date: str) -> DataFrame:
-    raw_schema = scfg.table_schema(wh.cfg, raw_table)
-    tracked_fields = [f for f in raw_schema.fields if f.name in tracked]
-    dim_schema = _scd2_dim_schema(key, tracked_fields, sk)
-    dim = wh.read_or_empty("core", table, dim_schema)
-    src = wh.raw_slice(raw_table, run_date).select(key, *tracked, "ingestion_timestamp")
-    new_dim = apply_scd2(
-        dim, src, key=key, tracked=tracked, run_date=run_date,
-        sk_col=sk, order_col="ingestion_timestamp",
-    )
-    # full read-modify-write rewrite; swap because new_dim's lineage reads
-    # the same path (SCD2 touches open-ended versions, so per-partition
-    # refresh doesn't apply — dims are small, facts are the big table)
-    sio.write_swap(new_dim, wh.path("core", table))
-    return wh.read("core", table)
 
 
 def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
@@ -134,12 +176,17 @@ def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
             df = df.withColumn(
                 "ingestion_timestamp", F.lit(f"{run_date} 00:00:00").cast("timestamp")
             ).withColumn("ingest_date", F.to_date("ingestion_timestamp"))
+            # the row count rides on the write: a separate count() re-scans
+            # the CSV with every column pruned, so DROPMALFORMED never parses
+            # (or drops) a malformed row and the count overstates the table
+            written = Observation()
+            df = df.observe(written, F.count(F.lit(1)).alias("rows"))
             # dynamic partition overwrite of the run_date partition instead of
             # the reference's WRITE_APPEND: re-running a date replaces that
             # day's slice rather than duplicating it (fixes ref bug #6's raw
             # half; other dates' partitions are untouched)
             sio.write_partition_overwrite(df, wh.path("raw", table), "ingest_date")
-            return df.count()
+            return written.get["rows"]
 
         return ingest
 
@@ -147,26 +194,34 @@ def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
         p.add_stage(t, make_ingest(t), layer="raw")
 
     # --- core: SCD2 dims ----------------------------------------------
-    def dim_customers(spark, run_date, results):
-        return _dim_stage(wh, "dim_customers", "customers", "customer_id",
-                          "customer_sk", CUSTOMER_TRACKED, run_date)
+    def make_dim(table: str, raw_table: str, key: str, sk: str, tracked: list[str]):
+        def dim_stage(spark, run_date, results):
+            dim = wh.read_or_empty("core", table)
+            src = wh.raw_slice(raw_table, run_date).select(
+                key, *tracked, "ingestion_timestamp")
+            new_dim = apply_scd2(
+                dim, src, key=key, tracked=tracked, run_date=run_date,
+                sk_col=sk, order_col="ingestion_timestamp",
+            )
+            # full read-modify-write rewrite; swap because new_dim's lineage
+            # reads the same path (SCD2 touches open-ended versions, so
+            # per-partition refresh doesn't apply — dims are small, facts
+            # are the big table)
+            sio.write_swap(new_dim, wh.path("core", table))
 
-    def dim_products(spark, run_date, results):
-        return _dim_stage(wh, "dim_products", "products", "product_id",
-                          "product_sk", PRODUCT_TRACKED, run_date)
+        return dim_stage
+
+    for table, *spec in DIMS:
+        p.add_stage(table, make_dim(table, *spec),
+                    deps=scfg.dependencies(cfg, table), layer="core")
 
     def dim_dates(spark, run_date, results):
         """dim_dates.sql: run_date → +3 years, upsert on full_date."""
         generated = build_date_dim(spark, run_date, _plus_years(run_date, 3))
-        existing = wh.read_or_empty("core", "dim_dates", generated.schema)
+        existing = wh.read_or_empty("core", "dim_dates")
         merged = merge_upsert(existing, generated, keys=["full_date"])
         sio.write_swap(merged, wh.path("core", "dim_dates"))
-        return wh.read("core", "dim_dates")
 
-    p.add_stage("dim_customers", dim_customers,
-                deps=scfg.dependencies(cfg, "dim_customers"), layer="core")
-    p.add_stage("dim_products", dim_products,
-                deps=scfg.dependencies(cfg, "dim_products"), layer="core")
     p.add_stage("dim_dates", dim_dates, layer="core")
 
     # --- core: fact ----------------------------------------------------
@@ -209,17 +264,16 @@ def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
         resolved = as_of_join(
             resolved, pdim, fact_key="product_id", dim_key="dim_pid", as_of="order_date"
         ).drop("dim_pid", "effective_date", "expiration_date")
-        fact_cols = [
-            "order_id", "order_date", "customer_sk", "order_amount", "quantity",
-            "order_item_id", "product_id", "product_sk", "unit_price",
-            "item_amount", "status",
-        ]
-        new_rows = resolved.select(fact_cols)
-        existing = wh.read_or_empty("core", "fact_orders", new_rows.schema)
+        # the merge reads the day slice twice (its keys and its rows):
+        # build the PIT-resolved slice once
+        new_rows = resolved.select(wh.schemas["fact_orders"].fieldNames()).persist()
+        existing = wh.read_or_empty("core", "fact_orders")
         merged = merge_upsert(existing, new_rows, keys=["order_id", "order_item_id"])
-        sio.write_swap(merged, wh.path("core", "fact_orders"),
-                       partition_by="order_date")
-        return wh.read("core", "fact_orders")
+        try:
+            sio.write_swap(merged, wh.path("core", "fact_orders"),
+                           partition_by="order_date")
+        finally:
+            new_rows.unpersist()
 
     p.add_stage("fact_orders", fact_orders,
                 deps=scfg.dependencies(cfg, "fact_orders"), layer="core")
@@ -254,7 +308,6 @@ def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
             )
         )
         sio.write_partition_overwrite(agg, wh.path("datamart", "sales_summary"), "date")
-        return wh.read("datamart", "sales_summary")
 
     def customer_analytics(spark, run_date, results):
         """Full refresh (S9) over current customer profiles (P4).
@@ -307,7 +360,6 @@ def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
         )
         result = per_cust.withColumn("customer_segment", seg)
         sio.write_full_overwrite(result, wh.path("datamart", "customer_analytics"))
-        return wh.read("datamart", "customer_analytics")
 
     p.add_stage("sales_summary", sales_summary,
                 deps=scfg.dependencies(cfg, "sales_summary"), layer="datamart")

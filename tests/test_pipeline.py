@@ -68,8 +68,8 @@ HEADERS = {
 }
 
 
-def _write_landing(base: str, cfg: dict) -> None:
-    for run_date, tables in LANDING.items():
+def _write_landing(base: str, cfg: dict, landing: dict = LANDING) -> None:
+    for run_date, tables in landing.items():
         for table, rows in tables.items():
             template = cfg["tables"][table]["source"]["path"]
             rel = resolve_dated_path(template, run_date)
@@ -156,22 +156,99 @@ def test_datamarts(warehouse):
     assert per["c3"].total_lifetime_value == 24.0
 
 
+TABLES = [
+    ("raw", "customers"), ("raw", "products"), ("raw", "orders"),
+    ("raw", "order_items"),
+    ("core", "dim_customers"), ("core", "dim_products"), ("core", "dim_dates"),
+    ("core", "fact_orders"),
+    ("datamart", "sales_summary"), ("datamart", "customer_analytics"),
+]
+
+
 def test_rerun_is_idempotent(spark, warehouse):
     """Re-running the last date must not change any table (ref bug #6 fix)."""
     before = {
         (layer, t): warehouse.read(layer, t).sort(*sorted(
             warehouse.read(layer, t).columns)).collect()
-        for layer, t in [
-            ("core", "dim_customers"), ("core", "dim_products"),
-            ("core", "fact_orders"),
-            ("datamart", "sales_summary"), ("datamart", "customer_analytics"),
-        ]
+        for layer, t in TABLES
     }
     build_sales_pipeline(warehouse).run(spark, D3)
     for (layer, t), rows in before.items():
         after = warehouse.read(layer, t).sort(*sorted(
             warehouse.read(layer, t).columns)).collect()
         assert after == rows, f"{layer}.{t} changed on rerun"
+
+
+def test_declared_schemas_match_stored_tables(spark, warehouse):
+    """Every read declares its schema from ``SalesWarehouse.schemas``; each
+    must equal what the writers actually stored (footer inference here is
+    the test's own read, not the pipeline's)."""
+    for layer, t in TABLES:
+        stored = spark.read.parquet(warehouse.path(layer, t)).schema
+        declared = warehouse.schemas[t]
+        assert {f.name: f.dataType for f in stored} == {
+            f.name: f.dataType for f in declared
+        }, f"{layer}.{t}"
+
+
+# Spark jobs of re-running D3 (all stages): 36 with declared-schema reads,
+# no read-backs and ingest counts observed on the write; 64 before them.
+# The bound leaves headroom for plan-shape noise, not for one more
+# inferred read or read-back per stage.
+RUN_DATE_JOB_BUDGET = 40
+
+
+def test_run_date_job_budget(spark, warehouse):
+    """Fixed per-job cost, not data, prices a small run date: an inferred
+    schema read, a read-back of a written table or a count() re-scan each
+    add Spark jobs that move no data.  Pin the date's job count."""
+    sc = spark.sparkContext
+    group = "test-run-date-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        build_sales_pipeline(warehouse).run(spark, D3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= RUN_DATE_JOB_BUDGET
+
+
+def test_first_date_with_facts_older_than_dims_completes(spark, tmp_path):
+    """Defect A's crash half: the first run date lands orders dated the day
+    before, so every order predates the dimension versions (effective from
+    the run date) and the inner PIT join resolves none.  ``fact_orders`` is
+    written with no files; inferring its schema on read used to raise
+    ``UNABLE_TO_INFER_SCHEMA`` in ``sales_summary``.  With declared schemas
+    the date completes with an empty fact.  The unresolved rows still
+    vanish without a reject (defect B)."""
+    cfg = load_config(CONFIG)
+    base = str(tmp_path)
+    _write_landing(base, cfg, {D2: LANDING[D1]})
+    wh = SalesWarehouse(spark, base, cfg)
+    results = build_sales_pipeline(wh).run(spark, D2)
+    assert results["order_items"] == 2
+    assert wh.read("core", "dim_customers").count() == 2
+    assert wh.read("core", "fact_orders").count() == 0
+    assert wh.read("datamart", "sales_summary").count() == 0
+    assert wh.read("datamart", "customer_analytics").count() == 0
+
+
+def test_ingest_row_count_excludes_malformed_rows(spark, tmp_path):
+    """A tolerant ingest drops a malformed row.  Its stage result must
+    count what it wrote: a separate count() prunes every CSV column, so the
+    parser never sees the bad value and the dropped row was counted."""
+    cfg = load_config(CONFIG)
+    base = str(tmp_path)
+    _write_landing(base, cfg, {D1: {"order_items": [
+        "i1,o1,p1,1,10.0,2024-01-15 09:00:00",
+        "i2,o1,p2,notanint,20.0,2024-01-15 09:00:00",
+    ]}})
+    wh = SalesWarehouse(spark, base, cfg)
+    written = build_sales_pipeline(wh).stages["order_items"].fn(spark, D1, {})
+    assert wh.raw_slice("order_items", D1).count() == 1
+    assert written == 1
 
 
 def test_stage_callbacks(spark, tmp_path):

@@ -116,6 +116,20 @@ def test_null_unsafe_comparison_would_miss(spark, dims):
     assert d1.filter("cid = 'c2'").count() == 2
 
 
+def test_null_business_key_is_dropped_and_reapply_is_idempotent(spark):
+    """A slice row with a NULL business key never matches its current
+    version (NULL = NULL is not true), so it used to classify "new" on
+    every apply: re-applying one slice left two current versions of the
+    NULL key.  NULL-key rows are dropped; re-applying changes nothing."""
+    empty = spark.createDataFrame([], DIM_SCHEMA)
+    rows = [(None, "Oslo", "n@x.com", 1), ("c1", "Bonn", "a@x.com", 1)]
+    once = _apply(spark, empty, rows, D0).cache()
+    twice = _apply(spark, once, rows, D0)
+    assert [(r.cid, r.sk, r.is_current) for r in twice.collect()] == [("c1", 1, True)]
+    _invariants(twice)
+    assert sorted(map(str, once.collect())) == sorted(map(str, twice.collect()))
+
+
 def test_distributed_surrogate_keys_match_global(spark):
     """assign_surrogate_keys (range-partitioned, parallel) must produce
     exactly the keys a global `row_number() over (order by key)` would."""
