@@ -13,6 +13,7 @@ from star_schema_etl_airflow_spark.plans.sales_domain import (
     SalesWarehouse,
     build_sales_pipeline,
 )
+from star_schema_etl_airflow_spark.session import CODEGEN_CACHE_ENTRIES
 from star_schema_etl_airflow_spark.sources.io import resolve_dated_path
 from star_schema_etl_airflow_spark.sources.schema import load_config
 
@@ -213,6 +214,30 @@ def test_run_date_job_budget(spark, warehouse):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs <= RUN_DATE_JOB_BUDGET
+
+
+# Compilations of a warm re-run of D3: 0-2 with the codegen cache sized to
+# the working set, 113-135 with Spark's 100-entry default, which evicts each
+# generated class before the next date needs it again (the ranges cover
+# running this test alone and after the rest of this file).  The bound
+# leaves room for the classes that inline the run date as a literal.
+RERUN_COMPILATION_BUDGET = 10
+
+
+def test_rerun_compiles_no_generated_code(spark, warehouse):
+    """A warm session's run date reuses its compiled code: a re-run of a
+    date compiles (almost) nothing, so the codegen cache must hold the
+    whole working set of a run date."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES)
+    # Janino compilations in this JVM, driver and task threads alike
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compilations = codegen.METRIC_COMPILATION_TIME()
+    pipeline = build_sales_pipeline(warehouse)
+    pipeline.run(spark, D3)
+    before = compilations.getCount()
+    pipeline.run(spark, D3)
+    assert compilations.getCount() - before <= RERUN_COMPILATION_BUDGET
 
 
 def test_first_date_with_facts_older_than_dims_completes(spark, tmp_path):
