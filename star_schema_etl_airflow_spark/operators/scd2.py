@@ -190,7 +190,6 @@ def apply_scd2(
     expiration_col: str = "expiration_date",
     current_col: str = "is_current",
     distributed_keys: bool | None = None,
-    persist_classified: bool = False,
 ) -> DataFrame:
     """Apply one day's slice to an SCD2 dimension; returns the new dimension.
 
@@ -229,11 +228,8 @@ def apply_scd2(
     cur = dim.filter(F.col(current_col))
     # classified feeds both the expire set and the insert set; measured:
     # recomputing the (delta-sized) classify join twice is cheaper than a
-    # cache materialization at daily-delta scale — persist only for deltas
-    # big enough that the double scan dominates
+    # cache materialization at daily-delta scale
     classified = classify_changes(src, cur, key, tracked)
-    if persist_classified:
-        classified = classified.persist()
 
     changed_keys = (
         classified.filter(F.col("change_type") == CHANGE_CHANGED).select(key)

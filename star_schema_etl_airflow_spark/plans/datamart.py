@@ -26,6 +26,9 @@ scale); (b) ``approx_count_distinct`` when exactness isn't required.
 Form (a) is now the production plan (see ``sales_summary``); the direct
 COUNT DISTINCT operator (A3) stays demonstrated by q16_supplier_cnt,
 the events queries, and ``operators/profile.py``.
+
+``customer_analytics`` is the pipeline's own plan, order grain included:
+its shape lives with ``plans.sales_domain.customer_rfm``.
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ from star_schema_etl_airflow_spark.functions import (
     safe_divide,
     sum_money,
 )
+from star_schema_etl_airflow_spark.plans.sales_domain import customer_rfm
 from star_schema_etl_airflow_spark.sources.fixtures import (
     load_table,
     spread_scan,
@@ -48,6 +52,10 @@ from star_schema_etl_airflow_spark.sources.fixtures import (
 # past it (replaces the reference's CURRENT_DATE per SURVEY.md §7.4
 # decision 3) so recency is always non-negative.
 RUN_DATE = "2001-09-01"
+
+# customer_analytics.sql:65-71's segment thresholds, in the shape of
+# ``sales_domain.REFERENCE_SEGMENTS``, rescaled to the fixture value range
+FIXTURE_SEGMENTS = ((90, 8, 500000), (180, 5), 365, 730)
 
 
 def sales_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,9 +171,9 @@ def customer_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        "o_custkey",
-        F.to_date("o_orderdate").alias("order_date"),
-    )
+        F.col("o_custkey").alias("customer_id"),
+        F.to_date("o_orderdate").alias("first_order_date"),
+    ).withColumn("last_order_date", F.col("first_order_date"))
     # r16: same spread as sales_summary — here hashpartitioning on
     # l_orderkey IS the per_order groupBy's clustering, so the pre-agg
     # runs exchange-free on the spread rows.
@@ -174,66 +182,16 @@ def customer_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_extendedprice",
     )
 
-    # Scale shape (measured ~35% faster than the naive form at sf0.1):
-    # (1) pre-aggregate lineitem to order grain — after that COUNT(*)
-    #     per customer IS the distinct order count (no count-distinct
-    #     Expand), and the orderkey join input shrinks ~4×;
-    # (2) group on the bare customer key and broadcast-enrich AFTER the
-    #     aggregate — name/segment/nation are functional dependencies
-    #     that don't belong in the hash key, and the enrich join then
-    #     touches one row per customer instead of one per lineitem.
+    # pre-aggregate lineitem to order grain before the orders join: the
+    # orderkey join input shrinks ~4x
     per_order = lineitem.groupBy("l_orderkey").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("__ov")
+        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("order_value")
     )
-    per_customer_raw = (
-        per_order.join(orders, per_order.l_orderkey == orders.o_orderkey)
-        .groupBy("o_custkey")
-        .agg(
-            F.min("order_date").alias("first_order_date"),
-            F.max("order_date").alias("last_order_date"),
-            F.count("*").alias("total_orders"),
-            F.sum("__ov").cast("double").alias("total_lifetime_value"),
-        )
-    )
+    order_rows = per_order.join(orders, per_order.l_orderkey == orders.o_orderkey)
     profile = customer.join(
         F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
     ).select("customer_id", "customer_name", "mktsegment", F.col("n_name").alias("nation_name"))
-
-    per_customer = (
-        per_customer_raw.join(
-            F.broadcast(profile),
-            per_customer_raw.o_custkey == profile.customer_id,
-        )
-        .select(
-            "customer_id", "customer_name", "mktsegment", "nation_name",
-            "first_order_date", "last_order_date", "total_orders",
-            "total_lifetime_value",
-        )
-        .withColumn(
-            "days_since_last_order",
-            F.datediff(F.lit(RUN_DATE).cast("date"), F.col("last_order_date")).cast("long"),
-        )
-        .withColumn(
-            "average_order_value",
-            safe_divide(F.col("total_lifetime_value"), F.col("total_orders")),
-        )
-    )
-
-    # RFM buckets: thresholds rescaled to the fixture value range but with the
-    # exact CASE shape of customer_analytics.sql:65-71.
-    seg = (
-        F.when(
-            (F.col("days_since_last_order") <= 90)
-            & (F.col("total_orders") >= 8)
-            & (F.col("total_lifetime_value") >= 500000),
-            "VIP",
-        )
-        .when((F.col("days_since_last_order") <= 180) & (F.col("total_orders") >= 5), "Loyal")
-        .when(F.col("days_since_last_order") <= 365, "Active")
-        .when(F.col("days_since_last_order") <= 730, "At Risk")
-        .otherwise("Inactive")
-    )
-    return per_customer.withColumn("customer_segment", seg)
+    return customer_rfm(order_rows, profile, RUN_DATE, FIXTURE_SEGMENTS)
 
 
 CUSTOMER_ANALYTICS_ORACLE = f"""

@@ -82,9 +82,9 @@ def add_drift_gated_refresh(
         verdict = results[monitor_stage]
         if not verdict["drifted"]:
             return {"action": "noop", "psi_total": verdict["psi_total"]}
-        from star_schema_etl_airflow_spark.sources.io import publish_swap
+        from star_schema_etl_airflow_spark.sources.io import write_swap
 
-        publish_swap(refresh_fn(spark, run_date), weights_path)
+        write_swap(refresh_fn(spark, run_date), weights_path)
         return {"action": "refreshed", "psi_total": verdict["psi_total"]}
 
     pipeline.add_stage(monitor_stage, monitor, deps=deps, layer="monitoring")
@@ -153,9 +153,9 @@ def add_ks_gated_refresh(
         verdict = results[monitor_stage]
         if not verdict["drifted"]:
             return {"action": "noop", "ks_d": verdict["ks_d"]}
-        from star_schema_etl_airflow_spark.sources.io import publish_swap
+        from star_schema_etl_airflow_spark.sources.io import write_swap
 
-        publish_swap(refresh_fn(spark, run_date), profile_path)
+        write_swap(refresh_fn(spark, run_date), profile_path)
         return {"action": "refreshed", "ks_d": verdict["ks_d"]}
 
     pipeline.add_stage(monitor_stage, monitor, deps=deps, layer="monitoring")

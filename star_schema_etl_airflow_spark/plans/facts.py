@@ -7,6 +7,10 @@ the output (the reference's INSERT drops it), and ``unit_price`` /
 (``unit_price := extended_price / quantity``, ``item_amount :=
 extended_price``) since the declared raw schema has no such columns.
 
+The PIT key resolution is the pipeline's own,
+``plans.sales_domain.resolve_dim_keys``; this module only maps the fixture
+tables onto it.
+
 Scale design: the header×lines join shuffles on the order key (bucketable);
 both dimension joins broadcast the dim side so the fact stream is shuffled
 exactly once end-to-end.
@@ -17,11 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from star_schema_etl_airflow_spark.operators.pit import as_of_join
 from star_schema_etl_airflow_spark.plans.dims import (
     SCD2_CUSTOMER_DIM_SQL,
     synthetic_scd2_customer_dim,
 )
+from star_schema_etl_airflow_spark.plans.sales_domain import resolve_dim_keys
 from star_schema_etl_airflow_spark.sources.fixtures import (
     load_table,
     spread_scan,
@@ -83,25 +87,9 @@ def fact_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     source = orders.join(items, orders.order_id == items.l_orderkey).drop("l_orderkey")
 
-    cdim = synthetic_scd2_customer_dim(spark, sf_dir).select(
-        "customer_sk", F.col("customer_id").alias("dim_customer_id"),
-        "effective_date", "expiration_date",
-    )
-    pdim = product_dim(spark, sf_dir).select(
-        "product_sk", F.col("product_id").alias("dim_product_id"),
-        "effective_date", "expiration_date",
-    )
-
-    with_cust = as_of_join(
-        source, cdim, fact_key="customer_id", dim_key="dim_customer_id",
-        as_of="order_date",
-    ).drop("dim_customer_id", "effective_date", "expiration_date")
-    with_prod = as_of_join(
-        with_cust, pdim, fact_key="product_id", dim_key="dim_product_id",
-        as_of="order_date",
-    ).drop("dim_product_id", "effective_date", "expiration_date")
-
-    return with_prod.select(
+    resolved = resolve_dim_keys(
+        source, synthetic_scd2_customer_dim(spark, sf_dir), product_dim(spark, sf_dir))
+    return resolved.select(
         "order_id",
         "order_date",
         "customer_sk",

@@ -22,7 +22,7 @@ scheduler interleaves jobs), an escape hatch for wide configs.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Mapping
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 from typing import Any
@@ -295,27 +295,6 @@ def run_audited(
             exception=None,
         )
     return results, _flush()
-
-
-def from_config(
-    cfg: Mapping[str, Any],
-    builders: Mapping[str, StageFn],
-    layer_of: Mapping[str, str] | None = None,
-) -> Pipeline:
-    """Build a pipeline from a domain config (shape of
-    config/sales_config.yaml) + a {table: builder fn} map.
-
-    Dependencies come from the config's ``dependencies`` lists (bare table
-    names); tables without declared deps get none (raw layer).
-    """
-    from star_schema_etl_airflow_spark.sources.schema import dependencies
-
-    p = Pipeline()
-    for name, fn in builders.items():
-        deps = [d for d in dependencies(cfg, name) if d in builders]
-        layer = (layer_of or {}).get(name)
-        p.add_stage(name, fn, deps=deps, layer=layer)
-    return p
 
 
 def run_backfill(

@@ -33,6 +33,11 @@ ingest stage returns the number of rows it wrote, observed on the write
 itself (``DataFrame.observe``) rather than by a second scan; every other
 stage returns ``None`` instead of a read-back of the table it wrote.
 Callers that want a table read it with :meth:`SalesWarehouse.read`.
+
+:func:`resolve_dim_keys` and :func:`customer_rfm` are shared with the
+registry specs in ``plans/facts.py`` and ``plans/datamart.py``.
+``sales_summary`` is not: this stage sums the order header amount on every
+line, as the reference does; the registry spec sums line prices.
 """
 
 from __future__ import annotations
@@ -99,6 +104,88 @@ CUSTOMER_ANALYTICS_DDL = (
     "days_since_last_order BIGINT, average_order_value DOUBLE, "
     "customer_segment STRING"
 )
+
+# customer_analytics.sql:65-71's CASE ladder as thresholds:
+# ((VIP days, orders, value), (Loyal days, orders), Active days, At Risk days);
+# a customer past all of them is Inactive
+REFERENCE_SEGMENTS = ((30, 3, 500), (90, 2), 180, 365)
+
+
+def resolve_dim_keys(
+    source: DataFrame, customers: DataFrame, products: DataFrame
+) -> DataFrame:
+    """fact_orders.sql's PIT joins: add to each fact line the
+    ``customer_sk`` and ``product_sk`` of the dimension versions in effect
+    on its ``order_date``; lines with none are dropped (inner joins).
+    ``as_of_join`` is called through this module's name, which is where
+    perfbench's tracer wraps it.
+    """
+    for sk, key, dim in (
+        ("customer_sk", "customer_id", customers),
+        ("product_sk", "product_id", products),
+    ):
+        versions = dim.select(
+            sk, F.col(key).alias("dim_key"), "effective_date", "expiration_date")
+        source = as_of_join(
+            source, versions, fact_key=key, dim_key="dim_key", as_of="order_date"
+        ).drop("dim_key", "effective_date", "expiration_date")
+    return source
+
+
+def customer_rfm(
+    orders: DataFrame, profile: DataFrame, run_date: str, segments: tuple
+) -> DataFrame:
+    """customer_analytics.sql's per-customer RFM metrics.
+
+    ``orders`` holds one row per order: ``customer_id``,
+    ``first_order_date``, ``last_order_date`` and an exact-decimal
+    ``order_value``.  At that grain COUNT(*) is the distinct order count,
+    with no count-distinct Expand (measured about 35% faster at sf0.1).
+    ``profile`` (``customer_id`` plus the columns to report) is broadcast-
+    joined after the aggregate, so its columns stay out of the hash key.
+    ``segments`` has the shape of :data:`REFERENCE_SEGMENTS`.  Columns come
+    out as ``customer_id``, the profile columns, then the metrics.
+    """
+    (vip_days, vip_orders, vip_value), (loyal_days, loyal_orders), \
+        active_days, at_risk_days = segments
+    per_customer = orders.groupBy("customer_id").agg(
+        F.min("first_order_date").alias("first_order_date"),
+        F.max("last_order_date").alias("last_order_date"),
+        F.count("*").alias("total_orders"),
+        F.sum("order_value").cast("double").alias("total_lifetime_value"),
+    )
+    recency = F.col("days_since_last_order")
+    n_orders = F.col("total_orders")
+    segment = (
+        F.when(
+            (recency <= vip_days) & (n_orders >= vip_orders)
+            & (F.col("total_lifetime_value") >= vip_value),
+            "VIP",
+        )
+        .when((recency <= loyal_days) & (n_orders >= loyal_orders), "Loyal")
+        .when(recency <= active_days, "Active")
+        .when(recency <= at_risk_days, "At Risk")
+        .otherwise("Inactive")
+    )
+    return (
+        per_customer.join(F.broadcast(profile), "customer_id")
+        .select(
+            "customer_id",
+            *[c for c in profile.columns if c != "customer_id"],
+            "first_order_date", "last_order_date", "total_orders",
+            "total_lifetime_value",
+        )
+        .withColumn(
+            "days_since_last_order",
+            F.datediff(F.lit(run_date).cast("date"), F.col("last_order_date"))
+            .cast("long"),
+        )
+        .withColumn(
+            "average_order_value",
+            safe_divide(F.col("total_lifetime_value"), n_orders),
+        )
+        .withColumn("customer_segment", segment)
+    )
 
 
 class SalesWarehouse:
@@ -250,20 +337,8 @@ def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
             )
             .drop("oi_order_id")
         )
-        cdim = wh.read("core", "dim_customers").select(
-            "customer_sk", F.col("customer_id").alias("dim_cid"),
-            "effective_date", "expiration_date",
-        )
-        pdim = wh.read("core", "dim_products").select(
-            "product_sk", F.col("product_id").alias("dim_pid"),
-            "effective_date", "expiration_date",
-        )
-        resolved = as_of_join(
-            source, cdim, fact_key="customer_id", dim_key="dim_cid", as_of="order_date"
-        ).drop("dim_cid", "effective_date", "expiration_date")
-        resolved = as_of_join(
-            resolved, pdim, fact_key="product_id", dim_key="dim_pid", as_of="order_date"
-        ).drop("dim_pid", "effective_date", "expiration_date")
+        resolved = resolve_dim_keys(
+            source, wh.read("core", "dim_customers"), wh.read("core", "dim_products"))
         # the merge reads the day slice twice (its keys and its rows):
         # build the PIT-resolved slice once
         new_rows = resolved.select(wh.schemas["fact_orders"].fieldNames()).persist()
@@ -319,46 +394,23 @@ def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
         needs sk → business key via ALL versions first, then the current
         profile attached by business key.
         """
-        fo = wh.read("core", "fact_orders")
         dim = wh.read("core", "dim_customers")
-        sk_map = dim.select("customer_sk", "customer_id")
-        dc = dim.filter("is_current").select(
-            "customer_id", "first_name", "last_name", "city", "state"
-        )
-        per_cust = (
-            fo.join(F.broadcast(sk_map), "customer_sk")
-            .join(F.broadcast(dc), "customer_id")
-            .groupBy("customer_id", "first_name", "last_name", "city", "state")
+        orders = (
+            wh.read("core", "fact_orders")
+            .join(F.broadcast(dim.select("customer_sk", "customer_id")), "customer_sk")
+            # by order alone: the lines of an order re-landed under another
+            # date carry both dates, and it is still one order
+            .groupBy("customer_id", "order_id")
             .agg(
                 F.min("order_date").alias("first_order_date"),
                 F.max("order_date").alias("last_order_date"),
-                F.countDistinct("order_id").alias("total_orders"),
-                F.sum(F.col("item_amount").cast("decimal(18,2)")).cast("double")
-                .alias("total_lifetime_value"),
-            )
-            .withColumn(
-                "days_since_last_order",
-                F.datediff(F.lit(run_date).cast("date"), F.col("last_order_date"))
-                .cast("long"),
-            )
-            .withColumn(
-                "average_order_value",
-                safe_divide(F.col("total_lifetime_value"), F.col("total_orders")),
+                F.sum(F.col("item_amount").cast("decimal(18,2)")).alias("order_value"),
             )
         )
-        seg = (
-            F.when(
-                (F.col("days_since_last_order") <= 30)
-                & (F.col("total_orders") >= 3)
-                & (F.col("total_lifetime_value") >= 500),
-                "VIP",
-            )
-            .when((F.col("days_since_last_order") <= 90) & (F.col("total_orders") >= 2), "Loyal")
-            .when(F.col("days_since_last_order") <= 180, "Active")
-            .when(F.col("days_since_last_order") <= 365, "At Risk")
-            .otherwise("Inactive")
+        profile = dim.filter("is_current").select(
+            "customer_id", "first_name", "last_name", "city", "state"
         )
-        result = per_cust.withColumn("customer_segment", seg)
+        result = customer_rfm(orders, profile, run_date, REFERENCE_SEGMENTS)
         sio.write_full_overwrite(result, wh.path("datamart", "customer_analytics"))
 
     p.add_stage("sales_summary", sales_summary,

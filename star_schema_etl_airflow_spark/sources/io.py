@@ -484,19 +484,6 @@ def _swap_publish(tmp: str, path: str) -> None:
         shutil.rmtree(old)
 
 
-def publish_swap(df, path: str) -> None:
-    """Write ``df`` as parquet and crash-safely swap it in at ``path``
-    (write to a temp sibling → :func:`_swap_publish` → refresh the
-    catalog cache) — the shared publish step of every streaming fold
-    and the drift-gated refresh, consolidated here after five modules
-    grew identical private copies."""
-    path = path.rstrip("/")
-    tmp = path + "__tmp_swap"
-    df.write.mode("overwrite").parquet(tmp)
-    _swap_publish(tmp, path)
-    df.sparkSession.catalog.refreshByPath(path)
-
-
 def recover_swap(path: str) -> bool:
     """Crash-recovery for ``_swap_publish``: if ``path`` is missing but a
     COMPLETE ``__tmp_swap`` sibling exists (Spark's ``_SUCCESS`` marker
@@ -523,7 +510,9 @@ def write_swap(df: DataFrame, path: str, partition_by: str | None = None) -> Non
     """Read-modify-write rewrite: write to a temp sibling, then swap.
 
     Required when ``df``'s lineage READS ``path`` (SCD2 dim rewrite, merge
-    upsert) — overwriting a path mid-read self-truncates.  The publish is
+    upsert) — overwriting a path mid-read self-truncates.  Also the
+    publish step of every streaming fold and of the drift-gated refresh,
+    whose restarts rely on ``recover_swap``.  The publish is
     the rename-aside protocol (``_swap_publish``) so a complete copy
     exists at every instant; renames are atomic on a local/HDFS
     filesystem; on object stores use a table format (Delta/Iceberg)

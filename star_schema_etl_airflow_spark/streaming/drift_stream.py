@@ -32,8 +32,8 @@ from pyspark.sql import types as T
 
 from star_schema_etl_airflow_spark.sources.io import (
     _target_exists,
-    publish_swap,
     recover_swap,
+    write_swap,
 )
 
 
@@ -151,7 +151,7 @@ def run_drift_stream(
         merged = merge_counts(existing, delta, batch_id, key_col,
                               run_id=_checkpoint_query_id(ckpt))
         if merged is not None:
-            publish_swap(merged, state_path)
+            write_swap(merged, state_path)
 
     query = (
         stream.writeStream.foreachBatch(fold_batch)

@@ -41,8 +41,8 @@ from star_schema_etl_airflow_spark.plans.ivfpq import _encode
 from star_schema_etl_airflow_spark.plans.pq import _SV_S
 from star_schema_etl_airflow_spark.sources.io import (
     _target_exists,
-    publish_swap,
     recover_swap,
+    write_swap,
 )
 
 CODE_SCHEMA = "cand_id long, cell long, m int, code long"
@@ -93,7 +93,7 @@ def run_ivfpq_stream(
             F.col("m").cast("int").alias("m"),
             "code",
         )
-        publish_swap(merge_codes(existing, delta_codes), state_path)
+        write_swap(merge_codes(existing, delta_codes), state_path)
 
     query = (
         stream.writeStream.foreachBatch(fold_batch)

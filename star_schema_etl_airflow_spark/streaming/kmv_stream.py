@@ -35,8 +35,8 @@ from star_schema_etl_airflow_spark.plans.kmv_overlap import (
 )
 from star_schema_etl_airflow_spark.sources.io import (
     _target_exists,
-    publish_swap,
     recover_swap,
+    write_swap,
 )
 
 
@@ -86,7 +86,7 @@ def run_kmv_stream(
             else None
         )
         delta_sig = kmv_sketches(spark, batch_df.select("source", "text"))
-        publish_swap(merge_sketches(existing, delta_sig), sketch_path)
+        write_swap(merge_sketches(existing, delta_sig), sketch_path)
 
     query = (
         stream.writeStream.foreachBatch(fold_batch)

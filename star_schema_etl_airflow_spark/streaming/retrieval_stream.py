@@ -38,8 +38,8 @@ from star_schema_etl_airflow_spark.plans.bm25 import (
 )
 from star_schema_etl_airflow_spark.sources.io import (
     _target_exists,
-    publish_swap,
     recover_swap,
+    write_swap,
 )
 
 
@@ -93,7 +93,7 @@ def run_retrieval_stream(
         scores = bm25_score_with_index(
             batch_df.select("doc_id", "text"), qidf
         )
-        publish_swap(merge_topk(existing, scores), state_path)
+        write_swap(merge_topk(existing, scores), state_path)
 
     query = (
         stream.writeStream.foreachBatch(fold_batch)

@@ -43,8 +43,8 @@ from star_schema_etl_airflow_spark.plans.llm_dedup2 import (
 )
 from star_schema_etl_airflow_spark.sources.io import (
     _target_exists,
-    publish_swap,
     recover_swap,
+    write_swap,
 )
 
 MATCH_SCHEMA = "delta_id long, corpus_id long, cluster long, cosine double"
@@ -135,7 +135,7 @@ def run_semdedup_stream(
             else None
         )
         matches = probe_batch(batch_df, codebook, at_rest)
-        publish_swap(merge_matches(existing, matches), state_path)
+        write_swap(merge_matches(existing, matches), state_path)
 
     query = (
         stream.writeStream.foreachBatch(fold_batch)

@@ -39,8 +39,8 @@ from star_schema_etl_airflow_spark.plans.video_dedup import (
 )
 from star_schema_etl_airflow_spark.sources.io import (
     _target_exists,
-    publish_swap,
     recover_swap,
+    write_swap,
 )
 # state ∪ delta with delta-only dedup on the (delta_id, corpus_id)
 # keys: the ledger fold is IDENTICAL to the semantic-dedup stream's
@@ -135,7 +135,7 @@ def run_video_stream(
         matches = probe_batch(
             batch_df, at_rest_sh, at_rest_sizes, base_mod
         )
-        publish_swap(merge_matches(existing, matches), state_path)
+        write_swap(merge_matches(existing, matches), state_path)
 
     query = (
         stream.writeStream.foreachBatch(fold_batch)

@@ -157,6 +157,108 @@ def test_datamarts(warehouse):
     assert per["c3"].total_lifetime_value == 24.0
 
 
+# D4 re-lands o1 under a new date with only one of its items: the merge
+# moves i1 to D4 and leaves i2 on D1, so o1's fact lines carry two dates.
+D4 = "2024-01-18"
+RELANDED = {
+    **LANDING,
+    D4: {
+        "customers": [],
+        "products": [],
+        "orders": ["o1,c1,2024-01-18,complete,30.0,2024-01-18 09:00:00"],
+        "order_items": ["i1,o1,p1,1,10.0,2024-01-18 09:00:00"],
+    },
+}
+
+# customer_analytics.sql from the stored fact and dim: customer_sk maps to
+# the business key through every SCD2 version, the profile is the current one
+CUSTOMER_ANALYTICS_RECOMPUTE = """
+WITH per_customer AS (
+  SELECT d.customer_id,
+         MIN(f.order_date) AS first_order_date,
+         MAX(f.order_date) AS last_order_date,
+         COUNT(DISTINCT f.order_id) AS total_orders,
+         CAST(SUM(CAST(f.item_amount AS DECIMAL(18,2))) AS DOUBLE)
+           AS total_lifetime_value
+  FROM fact f JOIN dim_customers d ON f.customer_sk = d.customer_sk
+  GROUP BY d.customer_id
+), rfm AS (
+  SELECT p.*, date_diff('day', last_order_date, DATE '{run_date}')
+           AS days_since_last_order
+  FROM per_customer p
+)
+SELECT r.customer_id, c.first_name, c.last_name, c.city, c.state,
+       first_order_date, last_order_date, total_orders, total_lifetime_value,
+       days_since_last_order,
+       total_lifetime_value / total_orders AS average_order_value,
+       CASE
+         WHEN days_since_last_order <= 30 AND total_orders >= 3
+              AND total_lifetime_value >= 500 THEN 'VIP'
+         WHEN days_since_last_order <= 90 AND total_orders >= 2 THEN 'Loyal'
+         WHEN days_since_last_order <= 180 THEN 'Active'
+         WHEN days_since_last_order <= 365 THEN 'At Risk'
+         ELSE 'Inactive'
+       END AS customer_segment
+FROM rfm r JOIN dim_customers c ON c.customer_id = r.customer_id AND c.is_current
+"""
+
+# sales_summary.sql for one date: the order header amount on every line
+SALES_SUMMARY_RECOMPUTE = """
+SELECT d.year, d.month, d.month_name, p.category AS product_category,
+       CAST(SUM(CAST(f.order_amount AS DECIMAL(18,2))) AS DOUBLE) AS total_sales,
+       COUNT(DISTINCT f.order_id) AS total_orders,
+       SUM(f.quantity) AS total_quantity,
+       CAST(SUM(CAST(f.order_amount AS DECIMAL(18,2))) AS DOUBLE)
+         / COUNT(DISTINCT f.order_id) AS avg_order_value,
+       f.order_date AS date
+FROM fact f
+JOIN dim_products p ON f.product_sk = p.product_sk
+JOIN dim_dates d ON f.order_date = d.full_date
+WHERE f.order_date = DATE '{run_date}'
+GROUP BY ALL
+"""
+
+
+def test_datamarts_match_duckdb_recompute(spark, tmp_path):
+    """Both datamarts equal DuckDB's recompute from the fact and dims the
+    pipeline wrote, after every run date.  D4 moves one line of o1 to a new
+    date; o1 must still count as one order with its first and last date."""
+    import duckdb
+
+    cfg = load_config(CONFIG)
+    base = str(tmp_path)
+    _write_landing(base, cfg, RELANDED)
+    wh = SalesWarehouse(spark, base, cfg)
+    pipeline = build_sales_pipeline(wh)
+    con = duckdb.connect()
+    for run_date in RELANDED:
+        pipeline.run(spark, run_date)
+        for table in ("dim_customers", "dim_products", "dim_dates"):
+            con.execute(f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM "
+                        f"read_parquet('{wh.path('core', table)}/*.parquet')")
+        con.execute(
+            "CREATE OR REPLACE VIEW fact AS SELECT * REPLACE "
+            "(CAST(order_date AS DATE) AS order_date) FROM read_parquet("
+            f"'{wh.path('core', 'fact_orders')}/*/*.parquet', hive_partitioning=true)")
+
+        want = con.execute(
+            CUSTOMER_ANALYTICS_RECOMPUTE.format(run_date=run_date)).fetchall()
+        got = wh.read("datamart", "customer_analytics").collect()
+        assert sorted(want) == sorted(map(tuple, got)), run_date
+
+        want = con.execute(SALES_SUMMARY_RECOMPUTE.format(run_date=run_date)).fetchall()
+        got = wh.read("datamart", "sales_summary").filter(
+            f"date = DATE '{run_date}'").collect()
+        assert sorted(want) == sorted(map(tuple, got)), run_date
+
+    o1_dates = con.execute(
+        "SELECT DISTINCT order_date FROM fact WHERE order_id = 'o1'").fetchall()
+    assert len(o1_dates) == 2
+    c1 = wh.read("datamart", "customer_analytics").filter("customer_id = 'c1'").first()
+    assert c1.total_orders == 2  # o1 and o3
+    assert (str(c1.first_order_date), str(c1.last_order_date)) == (D1, D4)
+
+
 TABLES = [
     ("raw", "customers"), ("raw", "products"), ("raw", "orders"),
     ("raw", "order_items"),

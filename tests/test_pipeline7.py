@@ -133,9 +133,9 @@ def test_gate_rides_every_row_and_audited_run_composes(spark, tmp_path):
     )
 
     def select_stage(s, run_date, results):
-        from star_schema_etl_airflow_spark.sources.io import publish_swap
+        from star_schema_etl_airflow_spark.sources.io import write_swap
 
-        publish_swap(curation_pipeline_v7(s, SF_DIR), sel_path)
+        write_swap(curation_pipeline_v7(s, SF_DIR), sel_path)
         return {"rows": s.read.parquet(sel_path).count()}
 
     p.add_stage("v7_select", select_stage,

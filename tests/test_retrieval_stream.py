@@ -83,12 +83,10 @@ def test_stream_fold_equals_batch_probe(spark, tmp_path):
     landing = _stage(spark, tmp_path, BATCHES)
     # seed the standing state with the at-rest lists, as a deployment
     # would after its last full pass
-    from star_schema_etl_airflow_spark.sources.io import (
-        publish_swap as _publish_swap,
-    )
+    from star_schema_etl_airflow_spark.sources.io import write_swap
 
     state = str(tmp_path / "state")
-    _publish_swap(at_topk, state)
+    write_swap(at_topk, state)
     got = run_retrieval_stream(spark, landing, state, SRC_SCHEMA, qidf)
 
     all_delta = spark.createDataFrame(
@@ -106,19 +104,17 @@ def test_stream_fold_equals_batch_probe(spark, tmp_path):
 
 def test_batching_independence(spark, tmp_path):
     qidf, at_topk = _at_rest_artifacts(spark)
-    from star_schema_etl_airflow_spark.sources.io import (
-        publish_swap as _publish_swap,
-    )
+    from star_schema_etl_airflow_spark.sources.io import write_swap
 
     all_rows = [sorted({r for b in BATCHES for r in b})]
     s_one = str(tmp_path / "state_one")
-    _publish_swap(at_topk, s_one)
+    write_swap(at_topk, s_one)
     one = run_retrieval_stream(
         spark, _stage(spark, tmp_path, all_rows, "landing_all"),
         s_one, SRC_SCHEMA, qidf,
     )
     s_three = str(tmp_path / "state_three")
-    _publish_swap(at_topk, s_three)
+    write_swap(at_topk, s_three)
     three = run_retrieval_stream(
         spark, _stage(spark, tmp_path, BATCHES, "landing_three"),
         s_three, SRC_SCHEMA, qidf,
@@ -128,12 +124,10 @@ def test_batching_independence(spark, tmp_path):
 
 def test_redelivery_is_a_noop(spark, tmp_path):
     qidf, at_topk = _at_rest_artifacts(spark)
-    from star_schema_etl_airflow_spark.sources.io import (
-        publish_swap as _publish_swap,
-    )
+    from star_schema_etl_airflow_spark.sources.io import write_swap
 
     state = str(tmp_path / "state")
-    _publish_swap(at_topk, state)
+    write_swap(at_topk, state)
     run_retrieval_stream(
         spark, _stage(spark, tmp_path, BATCHES), state, SRC_SCHEMA, qidf
     )
@@ -150,12 +144,10 @@ def test_each_query_list_is_k_bounded_and_ranked(spark, tmp_path):
     from star_schema_etl_airflow_spark.plans.bm25 import TOP_K
 
     qidf, at_topk = _at_rest_artifacts(spark)
-    from star_schema_etl_airflow_spark.sources.io import (
-        publish_swap as _publish_swap,
-    )
+    from star_schema_etl_airflow_spark.sources.io import write_swap
 
     state = str(tmp_path / "state")
-    _publish_swap(at_topk, state)
+    write_swap(at_topk, state)
     got = run_retrieval_stream(
         spark, _stage(spark, tmp_path, BATCHES), state, SRC_SCHEMA, qidf
     ).collect()
