@@ -36,48 +36,3 @@ def merge_upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> D
     keys = list(keys)
     untouched = target.join(source.select(keys), on=keys, how="left_anti")
     return untouched.unionByName(source.select(target.columns))
-
-
-def delta_available() -> bool:
-    """True when the delta-spark package (and its JVM jars) is importable."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def merge_upsert_delta(
-    spark,
-    target_path: str,
-    source: DataFrame,
-    keys: Sequence[str],
-) -> None:
-    """The 1:1 Delta Lake backend for the reference MERGE
-    (sql/core/fact/fact_orders.sql:6-105 and dim upserts,
-    sql/core/dim/dim_customers.sql:12-80):
-    ``DeltaTable.merge().whenMatchedUpdateAll().whenNotMatchedInsertAll()``
-    on the composite key — identical semantics to :func:`merge_upsert`
-    (differential equivalence pinned in ``tests/test_merge_delta.py``,
-    skipped where delta-spark is absent), but executed as an in-place
-    transactional MERGE instead of a read-modify-write swap.
-
-    Scale notes: Delta's MERGE rewrites only the files containing matched
-    keys (file-level skipping via min/max stats), so a daily slice against
-    a 100 TB fact touches O(day) files; pair with table partitioning on
-    the date column exactly like the parquet path.
-    """
-    from delta.tables import DeltaTable
-
-    keys = list(keys)
-    tgt = DeltaTable.forPath(spark, target_path)
-    # plain equality, not <=>: mirrors merge_upsert's equi-join (NULL keys
-    # never match — a NULL-keyed source row inserts rather than updates)
-    cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-    (
-        tgt.alias("t")
-        .merge(source.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )

@@ -13,41 +13,30 @@ the open end.
 Scale design: Catalyst plans the equi-key as the join key (hash or
 sort-merge) and the range predicate as a residual filter — so this costs the
 same as a plain equi-join plus a cheap filter.  SCD dimensions are
-dimension-sized (≪ fact), so the dim side is broadcast by default: at 100 TB
-of facts the fact stream is never shuffled for this join.  If a dimension
-ever outgrows broadcast, pass ``broadcast_dim=False`` and AQE picks a
-sort-merge join on the equi key (skew on a hot key is handled by AQE skew
-splitting; the residual range filter is unaffected).
+dimension-sized (≪ fact), so the dim side is broadcast: at 100 TB
+of facts the fact stream is never shuffled for this join.  A dimension
+that outgrew broadcast would drop the hint and let AQE pick a sort-merge
+join on the equi key (skew on a hot key is handled by AQE skew splitting;
+the residual range filter is unaffected).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def as_of_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    as_of: str,
-    effective_col: str = "effective_date",
-    expiration_col: str = "expiration_date",
-    how: str = "inner",
-    broadcast_dim: bool = True,
-    extra_cond: Column | None = None,
+    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str, as_of: str
 ) -> DataFrame:
-    """Join each fact row to the dim version valid at ``fact[as_of]``."""
-    d = F.broadcast(dim) if broadcast_dim else dim
+    """Inner-join each fact row to the dim version valid at ``fact[as_of]``
+    (``dim`` carries ``effective_date`` and ``expiration_date``)."""
     cond = (
         (fact[fact_key] == dim[dim_key])
-        & (fact[as_of] >= dim[effective_col])
-        & (dim[expiration_col].isNull() | (fact[as_of] < dim[expiration_col]))
+        & (fact[as_of] >= dim["effective_date"])
+        & (dim["expiration_date"].isNull() | (fact[as_of] < dim["expiration_date"]))
     )
-    if extra_cond is not None:
-        cond = cond & extra_cond
-    return fact.join(d, cond, how)
+    return fact.join(F.broadcast(dim), cond)
 
 
 def as_of_backward(

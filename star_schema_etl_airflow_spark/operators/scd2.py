@@ -186,16 +186,12 @@ def apply_scd2(
     run_date: str,
     sk_col: str,
     order_col: str | None = None,
-    effective_col: str = "effective_date",
-    expiration_col: str = "expiration_date",
-    current_col: str = "is_current",
     distributed_keys: bool | None = None,
 ) -> DataFrame:
     """Apply one day's slice to an SCD2 dimension; returns the new dimension.
 
-    ``dim`` columns: ``sk_col, key, *tracked, effective_col, expiration_col,
-    current_col`` (extra passthrough columns are preserved on untouched rows
-    but must also exist in ``source`` for inserted rows).
+    ``dim`` columns: ``sk_col, key, *tracked, effective_date,
+    expiration_date, is_current``.
     ``source`` columns: ``key, *tracked``.
 
     ``distributed_keys``: ``None`` (default) auto-selects the surrogate-key
@@ -225,7 +221,7 @@ def apply_scd2(
     src = dedupe_latest(source, key, order_col) if order_col else source
     src = src.select(key, *tracked)
 
-    cur = dim.filter(F.col(current_col))
+    cur = dim.filter(F.col("is_current"))
     # classified feeds both the expire set and the insert set; measured:
     # recomputing the (delta-sized) classify join twice is cheaper than a
     # cache materialization at daily-delta scale
@@ -240,13 +236,15 @@ def apply_scd2(
     # reference's in-place MERGE UPDATE, SURVEY §7.4 decision 1).
     flag = changed_keys.withColumn("__expire", F.lit(True))
     dim_flagged = dim.join(F.broadcast(flag), on=key, how="left")
-    expire_now = F.col("__expire").isNotNull() & F.col(current_col)
+    expire_now = F.col("__expire").isNotNull() & F.col("is_current")
     carried = (
         dim_flagged.withColumn(
-            expiration_col, F.when(expire_now, run).otherwise(F.col(expiration_col))
+            "expiration_date",
+            F.when(expire_now, run).otherwise(F.col("expiration_date")),
         )
         .withColumn(
-            current_col, F.when(expire_now, F.lit(False)).otherwise(F.col(current_col))
+            "is_current",
+            F.when(expire_now, F.lit(False)).otherwise(F.col("is_current")),
         )
         .drop("__expire")
     )
@@ -273,11 +271,11 @@ def apply_scd2(
         )
     inserted = (
         keyed
-        .withColumn(effective_col, run)
-        .withColumn(expiration_col, F.lit(None).cast("date"))
-        .withColumn(current_col, F.lit(True))
+        .withColumn("effective_date", run)
+        .withColumn("expiration_date", F.lit(None).cast("date"))
+        .withColumn("is_current", F.lit(True))
         .drop("change_type")
     )
 
-    cols = [sk_col, key, *tracked, effective_col, expiration_col, current_col]
+    cols = [sk_col, key, *tracked, "effective_date", "expiration_date", "is_current"]
     return carried.select(cols).unionByName(inserted.select(cols))

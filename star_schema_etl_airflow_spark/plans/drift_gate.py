@@ -1,8 +1,8 @@
 """Monitor → threshold → action, composed as pipeline stages: the
 distribution-drift monitor (``corpus_drift_psi``'s PSI core) gates the
-tempered-weight refresh (``mixture_refresh``) inside the audited
-runner (``plans/pipeline.py``) — closing the loop that previously
-existed only as three independent parts.
+tempered-weight refresh (``mixture_refresh``) inside ``Pipeline.run``
+with its ``audit_path`` (``plans/pipeline.py``) — closing the loop that
+previously existed only as three independent parts.
 
 Semantics (the standard model-monitoring operating point): PSI > 0.25
 means the ingest shifted the corpus mix enough that the training

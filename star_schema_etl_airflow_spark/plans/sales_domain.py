@@ -13,7 +13,7 @@ re-expressed as one config-driven :class:`Pipeline`:
 - dim_dates         ← dim_dates.sql MERGE (upsert on full_date)
 - fact_orders       ← fact_orders.sql MERGE: J1 assembly + PIT joins +
                       composite-key upsert, partitioned by order_date
-- sales_summary     ← per-date DELETE+INSERT → dynamic partition overwrite
+- sales_summary     ← per-date DELETE+INSERT → refresh of every date ≤ run date
 - customer_analytics← full refresh (DELETE WHERE TRUE + INSERT)
 
 Storage: ``base_dir/{raw,core,datamart}/<table>`` parquet, date-partitioned
@@ -355,10 +355,16 @@ def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
 
     # --- datamarts -----------------------------------------------------
     def sales_summary(spark, run_date, results):
-        """Per-date refresh (S8): only the run_date partition is rewritten."""
-        fo = wh.read("core", "fact_orders").filter(
-            F.col("order_date") == F.lit(run_date).cast("date")
-        )
+        """Refresh (S8) of every date up to the run date, recomputed from
+        the fact.  A re-landed order whose line the fact merge moved to a
+        new date leaves its old date with fewer lines, or none; a date left
+        with none must lose its rows, which a dynamic partition overwrite
+        cannot do, so the table (dates × categories, small) is rewritten
+        whole, in one task.  Dates after the run date are left to their
+        own run, as in the reference, and a re-run of an earlier date keeps
+        them."""
+        day = F.lit(run_date).cast("date")
+        fo = wh.read("core", "fact_orders").filter(F.col("order_date") <= day)
         dp = wh.read("core", "dim_products").select("product_sk", "category")
         dd = wh.read("core", "dim_dates").select(
             "full_date", "year", "month", "month_name"
@@ -382,7 +388,10 @@ def build_sales_pipeline(wh: SalesWarehouse) -> Pipeline:
                 safe_divide(F.col("total_sales"), F.col("total_orders")),
             )
         )
-        sio.write_partition_overwrite(agg, wh.path("datamart", "sales_summary"), "date")
+        later = wh.read_or_empty("datamart", "sales_summary").filter(
+            F.col("date") > day)
+        sio.write_swap(later.unionByName(agg).coalesce(1),
+                       wh.path("datamart", "sales_summary"), partition_by="date")
 
     def customer_analytics(spark, run_date, results):
         """Full refresh (S9) over current customer profiles (P4).

@@ -1,10 +1,10 @@
-"""Schema-drift detection and the audited pipeline runner."""
+"""Schema-drift detection and the pipeline runner's audit options."""
 
 from __future__ import annotations
 
 import pytest
 
-from star_schema_etl_airflow_spark.plans.pipeline import Pipeline, run_audited
+from star_schema_etl_airflow_spark.plans.pipeline import Pipeline
 from star_schema_etl_airflow_spark.sources.schema import (
     build_struct_type,
     enforce_schema,
@@ -52,12 +52,12 @@ def test_audited_run_records_every_stage(spark, tmp_path):
         .add_stage("fact", lambda s, d, r: r["dim"] + 1, deps=["dim"],
                    layer="core")
     )
-    results, audit = run_audited(p, spark, "2024-01-01", audit_path)
+    results = p.run(spark, "2024-01-01", audit_path=audit_path)
     assert results == {"dim": 1, "fact": 2}
+    audit = spark.read.parquet(audit_path)
     rows = {(r.stage, r.status) for r in audit.collect()}
     assert rows == {("dim", "ok"), ("fact", "ok")}
-    persisted = spark.read.parquet(audit_path)
-    assert persisted.count() == 2
+    assert audit.count() == 2
 
 
 def test_failed_stage_is_flushed_before_raise(spark, tmp_path):
@@ -72,7 +72,7 @@ def test_failed_stage_is_flushed_before_raise(spark, tmp_path):
         .add_stage("bad_stage", boom, deps=["ok_stage"])
     )
     with pytest.raises(RuntimeError, match="stage exploded"):
-        run_audited(p, spark, "2024-01-01", audit_path)
+        p.run(spark, "2024-01-01", audit_path=audit_path)
     got = {
         (r.stage, r.status)
         for r in spark.read.parquet(audit_path).collect()
@@ -89,13 +89,12 @@ def test_retry_then_success(spark, tmp_path):
             raise RuntimeError("transient")
         return "ok"
 
+    audit_path = str(tmp_path / "audit")
     p = Pipeline()
     p.add_stage("flaky", flaky)
-    results, audit = run_audited(
-        p, spark, "2024-02-01", str(tmp_path / "audit"), retries=1
-    )
+    results = p.run(spark, "2024-02-01", audit_path=audit_path, retries=1)
     assert results["flaky"] == "ok" and calls["n"] == 2
-    row = audit.filter("stage = 'flaky'").first()
+    row = spark.read.parquet(audit_path).filter("stage = 'flaky'").first()
     assert row.status == "ok" and row.attempts == 2
 
 
@@ -115,9 +114,8 @@ def test_resume_skips_completed_stages(spark, tmp_path):
     p.add_stage("a", mk("a"))
     p.add_stage("b", mk("b", fail=True), deps=("a",))
     p.add_stage("c", mk("c"), deps=("b",))
-    import pytest as _pytest
-    with _pytest.raises(RuntimeError):
-        run_audited(p, spark, "2024-02-02", audit_path)
+    with pytest.raises(RuntimeError):
+        p.run(spark, "2024-02-02", audit_path=audit_path)
     assert ran == ["a", "b"]
 
     # fix b, resume: a is skipped, b and c run
@@ -126,23 +124,27 @@ def test_resume_skips_completed_stages(spark, tmp_path):
     p2.add_stage("a", mk("a"))
     p2.add_stage("b", mk("b"), deps=("a",))
     p2.add_stage("c", mk("c"), deps=("b",))
-    results, audit = run_audited(
-        p2, spark, "2024-02-02", audit_path, resume=True
-    )
+    results = p2.run(spark, "2024-02-02", audit_path=audit_path, resume=True)
     assert ran == ["b", "c"]
-    statuses = {r.stage: r.status for r in audit.collect()}
-    assert statuses == {"a": "skipped", "b": "ok", "c": "ok"}
+    assert results == {"a": None, "b": "b", "c": "c"}
+    # the failed run's two rows, then the resumed run's three
+    rows = sorted((r.stage, r.status)
+                  for r in spark.read.parquet(audit_path).collect())
+    assert rows == [("a", "ok"), ("a", "skipped"), ("b", "failed"),
+                    ("b", "ok"), ("c", "ok")]
 
 
 def test_backfill_runs_each_date_in_order(spark, tmp_path):
-    from star_schema_etl_airflow_spark.plans.pipeline import run_backfill
-
+    """A backfill is one run per date, in order, on one audit table."""
+    dates = ["2024-03-01", "2024-03-02", "2024-03-03"]
+    audit_path = str(tmp_path / "audit")
     seen: list[str] = []
     p = Pipeline()
     p.add_stage("s", lambda sp, d, r: seen.append(d) or d)
-    out = run_backfill(
-        p, spark, ["2024-03-01", "2024-03-02", "2024-03-03"],
-        str(tmp_path / "audit"),
-    )
-    assert seen == ["2024-03-01", "2024-03-02", "2024-03-03"]
-    assert set(out) == set(seen)
+    out = {d: p.run(spark, d, audit_path=audit_path) for d in dates}
+    assert seen == dates
+    assert out == {d: {"s": d} for d in dates}
+    audit = spark.read.parquet(audit_path).orderBy("logged_at", "run_date")
+    assert [(r.run_date, r.stage, r.status) for r in audit.collect()] == [
+        (d, "s", "ok") for d in dates
+    ]

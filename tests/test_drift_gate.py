@@ -12,10 +12,7 @@ from star_schema_etl_airflow_spark.plans.drift_gate import (
     add_drift_gated_refresh,
 )
 from star_schema_etl_airflow_spark.plans.llm_sampling import mixture_refresh
-from star_schema_etl_airflow_spark.plans.pipeline import (
-    Pipeline,
-    run_audited,
-)
+from star_schema_etl_airflow_spark.plans.pipeline import Pipeline
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -44,7 +41,8 @@ def _build(spark, tmp_path, at_rows, delta_rows, tag):
         weights_path=weights,
         monitor_path=monitor,
     )
-    results, audit_df = run_audited(p, spark, "2024-06-01", audit_path=audit)
+    results = p.run(spark, "2024-06-01", audit_path=audit)
+    audit_df = spark.read.parquet(audit)
     return results, audit_df, weights, monitor
 
 
@@ -181,7 +179,8 @@ def _build_ks(spark, tmp_path, rows, tag):
         profile_path=profile,
         monitor_path=monitor,
     )
-    results, audit_df = run_audited(p, spark, "2024-06-02", audit_path=audit)
+    results = p.run(spark, "2024-06-02", audit_path=audit)
+    audit_df = spark.read.parquet(audit)
     return results, audit_df, profile, monitor
 
 

@@ -202,7 +202,7 @@ SELECT r.customer_id, c.first_name, c.last_name, c.city, c.state,
 FROM rfm r JOIN dim_customers c ON c.customer_id = r.customer_id AND c.is_current
 """
 
-# sales_summary.sql for one date: the order header amount on every line
+# sales_summary.sql over the whole fact: the order header amount on every line
 SALES_SUMMARY_RECOMPUTE = """
 SELECT d.year, d.month, d.month_name, p.category AS product_category,
        CAST(SUM(CAST(f.order_amount AS DECIMAL(18,2))) AS DOUBLE) AS total_sales,
@@ -214,7 +214,6 @@ SELECT d.year, d.month, d.month_name, p.category AS product_category,
 FROM fact f
 JOIN dim_products p ON f.product_sk = p.product_sk
 JOIN dim_dates d ON f.order_date = d.full_date
-WHERE f.order_date = DATE '{run_date}'
 GROUP BY ALL
 """
 
@@ -222,7 +221,8 @@ GROUP BY ALL
 def test_datamarts_match_duckdb_recompute(spark, tmp_path):
     """Both datamarts equal DuckDB's recompute from the fact and dims the
     pipeline wrote, after every run date.  D4 moves one line of o1 to a new
-    date; o1 must still count as one order with its first and last date."""
+    date; o1 must still count as one order with its first and last date,
+    and the summary of the date the line left must no longer count it."""
     import duckdb
 
     cfg = load_config(CONFIG)
@@ -246,9 +246,8 @@ def test_datamarts_match_duckdb_recompute(spark, tmp_path):
         got = wh.read("datamart", "customer_analytics").collect()
         assert sorted(want) == sorted(map(tuple, got)), run_date
 
-        want = con.execute(SALES_SUMMARY_RECOMPUTE.format(run_date=run_date)).fetchall()
-        got = wh.read("datamart", "sales_summary").filter(
-            f"date = DATE '{run_date}'").collect()
+        want = con.execute(SALES_SUMMARY_RECOMPUTE).fetchall()
+        got = wh.read("datamart", "sales_summary").collect()
         assert sorted(want) == sorted(map(tuple, got)), run_date
 
     o1_dates = con.execute(
@@ -257,6 +256,12 @@ def test_datamarts_match_duckdb_recompute(spark, tmp_path):
     c1 = wh.read("datamart", "customer_analytics").filter("customer_id = 'c1'").first()
     assert c1.total_orders == 2  # o1 and o3
     assert (str(c1.first_order_date), str(c1.last_order_date)) == (D1, D4)
+
+    # a re-run of an earlier date keeps the later dates' summary rows
+    pipeline.run(spark, D2)
+    want = con.execute(SALES_SUMMARY_RECOMPUTE).fetchall()
+    got = wh.read("datamart", "sales_summary").collect()
+    assert sorted(want) == sorted(map(tuple, got))
 
 
 TABLES = [
@@ -379,14 +384,14 @@ def test_ingest_row_count_excludes_malformed_rows(spark, tmp_path):
 
 
 def test_stage_callbacks(spark, tmp_path):
-    """O5 analog: on_stage_complete fires once per stage in topo order."""
+    """O5 analog: on_success fires once per stage in topo order."""
     cfg = load_config(CONFIG)
     base = str(tmp_path)
     _write_landing(base, cfg)
     wh = SalesWarehouse(spark, base, cfg)
     pipeline = build_sales_pipeline(wh)
     seen = []
-    pipeline.run(spark, D1, on_stage_complete=lambda name, result: seen.append(name))
+    pipeline.run(spark, D1, on_success=lambda c: seen.append(c["stage"]))
     assert seen == pipeline.topological_order()
 
 
@@ -415,11 +420,9 @@ def _tiny_pipeline(fail_stage=None, fail_times=0):
 def test_per_status_callbacks_success(spark, tmp_path):
     """on_success fires per stage with the full context dict; failure and
     retry channels stay silent on a clean run."""
-    from star_schema_etl_airflow_spark.plans.pipeline import run_audited
-
     events = []
-    run_audited(
-        _tiny_pipeline(), spark, D1,
+    _tiny_pipeline().run(
+        spark, D1,
         on_success=lambda c: events.append(("ok", c["stage"], c["attempt"])),
         on_failure=lambda c: events.append(("fail", c["stage"])),
         on_retry=lambda c: events.append(("retry", c["stage"])),
@@ -431,12 +434,10 @@ def test_per_status_callbacks_retry_then_failure(spark, tmp_path):
     """A stage failing through its retry budget fires on_retry per retry
     and on_failure once, with the exception in the context (the MS Teams
     plugin's orange + red channels)."""
-    from star_schema_etl_airflow_spark.plans.pipeline import run_audited
-
     events = []
     with pytest.raises(RuntimeError, match="boom"):
-        run_audited(
-            _tiny_pipeline(fail_stage="a", fail_times=99), spark, D1,
+        _tiny_pipeline(fail_stage="a", fail_times=99).run(
+            spark, D1,
             retries=2,
             on_success=lambda c: events.append(("ok", c["stage"])),
             on_failure=lambda c: events.append(
@@ -452,11 +453,9 @@ def test_per_status_callbacks_retry_then_failure(spark, tmp_path):
 def test_per_status_callbacks_retry_then_success(spark, tmp_path):
     """A stage that fails once then succeeds fires on_retry then
     on_success; the run completes."""
-    from star_schema_etl_airflow_spark.plans.pipeline import run_audited
-
     events = []
-    results, audit = run_audited(
-        _tiny_pipeline(fail_stage="a", fail_times=1), spark, D1,
+    results = _tiny_pipeline(fail_stage="a", fail_times=1).run(
+        spark, D1,
         retries=1,
         on_success=lambda c: events.append(("ok", c["stage"], c["attempt"])),
         on_retry=lambda c: events.append(("retry", c["stage"], c["attempt"])),
@@ -466,13 +465,16 @@ def test_per_status_callbacks_retry_then_success(spark, tmp_path):
 
 
 def test_callback_errors_never_fail_the_run(spark, tmp_path):
-    from star_schema_etl_airflow_spark.plans.pipeline import run_audited
-
     def bad_cb(ctx):
         raise ValueError("notification transport down")
 
-    results, _ = run_audited(_tiny_pipeline(), spark, D1, on_success=bad_cb)
+    results = _tiny_pipeline(fail_stage="a", fail_times=1).run(
+        spark, D1, retries=1, on_success=bad_cb, on_retry=bad_cb)
     assert results == {"a": "A", "b": "B"}
+    # a failing callback on a failed stage leaves the stage's own error
+    with pytest.raises(RuntimeError, match="boom"):
+        _tiny_pipeline(fail_stage="a", fail_times=9).run(
+            spark, D1, on_failure=bad_cb)
 
 
 def test_concurrent_run_raises(spark, tmp_path):
@@ -481,44 +483,75 @@ def test_concurrent_run_raises(spark, tmp_path):
     from star_schema_etl_airflow_spark.plans.pipeline import (
         ConcurrentRunError,
         Pipeline,
-        run_audited,
     )
 
     lock = str(tmp_path / "wh" / ".run_lock")
 
     def stage_that_reenters(spark_, run_date, results):
         with pytest.raises(ConcurrentRunError, match="already running"):
-            run_audited(_tiny_pipeline(), spark_, D1, lock_path=lock)
+            _tiny_pipeline().run(spark_, D1, lock_path=lock)
         return "done"
 
     p = Pipeline().add_stage("reenter", stage_that_reenters)
-    results, _ = run_audited(p, spark, D1, lock_path=lock)
-    assert results == {"reenter": "done"}
+    assert p.run(spark, D1, lock_path=lock) == {"reenter": "done"}
     # lock released after the run: a fresh run acquires it cleanly
-    results2, _ = run_audited(_tiny_pipeline(), spark, D1, lock_path=lock)
-    assert results2 == {"a": "A", "b": "B"}
+    assert not os.path.exists(lock)
+    assert _tiny_pipeline().run(spark, D1, lock_path=lock) == {"a": "A", "b": "B"}
 
 
 def test_lock_released_on_failure_and_breakable(spark, tmp_path):
     from star_schema_etl_airflow_spark.plans.pipeline import (
         ConcurrentRunError,
         break_run_lock,
-        run_audited,
     )
 
     lock = str(tmp_path / ".run_lock")
     with pytest.raises(RuntimeError, match="boom"):
-        run_audited(
-            _tiny_pipeline(fail_stage="a", fail_times=9), spark, D1,
-            lock_path=lock,
-        )
+        _tiny_pipeline(fail_stage="a", fail_times=9).run(
+            spark, D1, lock_path=lock)
     # failure path released the lock via the context manager
     assert not os.path.exists(lock)
     # simulate a crashed run's leftover marker
     with open(lock, "w") as f:
         f.write("pid=0 at=crashed")
     with pytest.raises(ConcurrentRunError):
-        run_audited(_tiny_pipeline(), spark, D1, lock_path=lock)
+        _tiny_pipeline().run(spark, D1, lock_path=lock)
     assert break_run_lock(lock) is True
-    results, _ = run_audited(_tiny_pipeline(), spark, D1, lock_path=lock)
-    assert results == {"a": "A", "b": "B"}
+    assert _tiny_pipeline().run(spark, D1, lock_path=lock) == {"a": "A", "b": "B"}
+
+
+def test_audited_options_leave_the_tables_of_a_plain_run(spark, tmp_path):
+    """The sales pipeline through every audited option (audit table, run
+    lock, one retry) writes the same tables as a plain run, one ``ok``
+    audit row per (date, stage), and releases its lock."""
+    cfg = load_config(CONFIG)
+    audit_path = str(tmp_path / "audit")
+    lock = str(tmp_path / "audited" / ".run_lock")
+    whs = []
+    for name in ("audited", "plain"):
+        base = str(tmp_path / name)
+        _write_landing(base, cfg)
+        wh = SalesWarehouse(spark, base, cfg)
+        pipeline = build_sales_pipeline(wh)
+        for d in (D1, D2, D3):
+            if name == "audited":
+                pipeline.run(spark, d, audit_path=audit_path, lock_path=lock,
+                             retries=1)
+            else:
+                pipeline.run(spark, d)
+        whs.append(wh)
+
+    audited, plain = whs
+    # a plain run writes the stages' tables and nothing else
+    assert sorted(os.listdir(plain.base)) == ["core", "datamart", "landing", "raw"]
+    for layer, t in TABLES:
+        a, p = audited.read(layer, t), plain.read(layer, t)
+        assert a.exceptAll(p).count() == 0 and p.exceptAll(a).count() == 0, t
+
+    audit = spark.read.parquet(audit_path).select(
+        "run_date", "stage", "status", "attempts").collect()
+    stages = build_sales_pipeline(audited).topological_order()
+    assert len(stages) == 10
+    assert sorted(map(tuple, audit)) == sorted(
+        (d, s, "ok", 1) for d in (D1, D2, D3) for s in stages)
+    assert not os.path.exists(lock)

@@ -115,10 +115,7 @@ def test_gate_rides_every_row_and_audited_run_composes(spark, tmp_path):
     from star_schema_etl_airflow_spark.plans.llm_sampling import (
         mixture_refresh,
     )
-    from star_schema_etl_airflow_spark.plans.pipeline import (
-        Pipeline,
-        run_audited,
-    )
+    from star_schema_etl_airflow_spark.plans.pipeline import Pipeline
 
     sel_path = str(tmp_path / "v7_selection")
 
@@ -140,8 +137,9 @@ def test_gate_rides_every_row_and_audited_run_composes(spark, tmp_path):
 
     p.add_stage("v7_select", select_stage,
                 deps=("mixture_refresh",), layer="curation")
-    results, audit = run_audited(p, spark, "2024-06-03",
-                                 audit_path=str(tmp_path / "audit"))
+    audit_path = str(tmp_path / "audit")
+    results = p.run(spark, "2024-06-03", audit_path=audit_path)
+    audit = spark.read.parquet(audit_path)
     assert results["v7_select"]["rows"] > 0
     assert os.path.isdir(sel_path)
     statuses = {(r.stage, r.status) for r in
